@@ -191,6 +191,18 @@ def _machine_calib(spark, trials: int = 5) -> dict[str, float]:
     return out
 
 
+def run_record(payload: str, sf_dir: str) -> dict:
+    """One BENCH_RUNS.jsonl line: the run's payload plus its metadata.
+    The payload is spread first, so a payload key named ``cpus``,
+    ``sf_dir`` or ``wall_unix`` can never overwrite the metadata."""
+    return {
+        **json.loads(payload),
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "sf_dir": sf_dir,
+        "wall_unix": round(time.time(), 1),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -421,14 +433,8 @@ def main() -> None:
     # payload to BENCH_RUNS.jsonl, keyed by cpu count + machine calib +
     # wall time. Additions only: stdout contract (<1 KB final line) and
     # BENCH_LAST.json are unchanged.
-    run_record = {
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
-        "sf_dir": sf_dir,
-        "wall_unix": round(time.time(), 1),
-        **json.loads(payload),
-    }
     with open(os.path.join(here, "BENCH_RUNS.jsonl"), "a") as fh:
-        fh.write(json.dumps(run_record) + "\n")
+        fh.write(json.dumps(run_record(payload, sf_dir)) + "\n")
     spark.stop()
 
 

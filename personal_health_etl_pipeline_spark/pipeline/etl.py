@@ -5,14 +5,25 @@ Mirrors the reference's two Airflow tasks (``run_extract_pipeline``,
 ``transform.py:161-240``) as two driver functions over lazy DataFrame
 graphs. Control flow (watermarks, early exit) stays driver-side Python
 — exactly the "thin driver logic" SURVEY.md §4 keeps — while every data
-motion is a Spark plan: pruned raw-zone scans, one flatten projection,
-one multi-way outer join, one schema-align projection, one append.
+motion is a Spark plan, and each run builds ONE raw-zone relation, not
+one per data type:
 
-Scale notes (100 TB): per-type extraction is embarrassingly parallel
-(no state crosses types); the combine shares one hash-partitioning on
-the key across all N joins; the warehouse append is a columnar write
-whose schema is enforced *before* the job runs (C2 fails in the driver,
-not per-task). Nothing but scalar watermarks ever reaches the driver.
+* extract: every type's new range is worked out from the driver
+  listing first (an overlapping range in any type fails before
+  anything lands), then all types land in one partitioned write;
+* transform: one scan of exactly the overlapping partition directories
+  of all types, one aggregate over ``(data_type, day)`` that enforces
+  uniqueness and doubles as the emptiness probe, one flatten, one
+  ``groupBy("day")`` that folds the types into wide rows, one
+  schema-align projection, one append.
+
+The cost of a daily run therefore follows the new day, not the landed
+history. Scale notes (100 TB): the landing write and the scan are
+partitioned by type, so types still proceed in parallel; the wide fold
+is a single aggregate on ``day`` (one shuffle, however many types);
+the warehouse append is a columnar write whose schema is enforced
+*before* the job runs (C2 fails in the driver, not per-task). Nothing
+but scalar watermarks and counts ever reaches the driver.
 """
 
 from __future__ import annotations
@@ -20,13 +31,16 @@ from __future__ import annotations
 import datetime as dt
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from personal_health_etl_pipeline_spark.functions.flatten import flatten, prefix_columns
-from personal_health_etl_pipeline_spark.operators.combine import combine_on_key
+from personal_health_etl_pipeline_spark.functions.flatten import flatten
+# not called by the run any more (``_wide_by_day`` folds the types), but
+# kept importable here: the etl_daily benchmark traces this name
+from personal_health_etl_pipeline_spark.operators.combine import combine_on_key  # noqa: F401
 from personal_health_etl_pipeline_spark.operators.conflict import assert_unique_key
 from personal_health_etl_pipeline_spark.pipeline.fixtures import (
     RECORD_SCHEMA,
@@ -101,16 +115,19 @@ def run_extract(
     today: dt.date,
     source=fetch_range_df,
 ) -> dict[str, int]:
-    """Land ``(watermark, yesterday]`` per data type into the raw zone.
+    """Land ``(watermark, yesterday]`` of every data type in one write.
 
     Watermark = last landed range end + 1 day, else yesterday −
-    ``historical_days`` (extract.py:170-177). Chunked types fetch in
-    windows and union (extract.py:133-149) — in Spark the union is one
-    plan, every chunk scanned in parallel. Empty results still land as
-    processed-markers (extract.py:187-193).
+    ``historical_days`` (extract.py:170-177). All windows come from the
+    driver listing before anything is fetched, so an overlapping range
+    in any type raises with the raw zone untouched. Chunked types fetch
+    in windows and union (extract.py:133-149) — in Spark the union is
+    one plan. Types with nothing new are skipped; empty results still
+    land as processed-markers (extract.py:187-193). Returns rows landed
+    per type, counted by the write itself.
     """
     yesterday = today - dt.timedelta(days=1)
-    landed: dict[str, int] = {}
+    starts: dict[str, dt.date] = {}
     for dtype in cfg.data_types:
         wm = max_landed_date(cfg.raw_root, dtype)
         start = (
@@ -118,31 +135,17 @@ def run_extract(
             if wm is not None
             else yesterday - dt.timedelta(days=cfg.historical_days)
         )
-        if start > yesterday:
-            continue  # nothing new — early exit per type
+        if start <= yesterday:
+            starts[dtype] = start
+    if not starts:
+        return {}  # nothing new in any type — early exit
+    landings = {}
+    for dtype, start in starts.items():
         chunk = cfg.chunk_days.get(dtype)
-        if chunk:
-            parts = [
-                source(spark, dtype, lo, hi)
-                for lo, hi in _chunk_ranges(start, yesterday, chunk)
-            ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        else:
-            df = source(spark, dtype, start, yesterday)
-        # observe() computes the row count as a side metric of the write
-        # action itself — the source is read exactly once per type.
-        obs = Observation()
-        write_raw(
-            df.observe(obs, F.count(F.lit(1)).alias("n")),
-            cfg.raw_root,
-            dtype,
-            start,
-            yesterday,
-        )
-        landed[dtype] = obs.get["n"]
-    return landed
+        windows = _chunk_ranges(start, yesterday, chunk) if chunk else [(start, yesterday)]
+        parts = [source(spark, dtype, lo, hi) for lo, hi in windows]
+        landings[dtype] = (reduce(DataFrame.unionByName, parts), start, yesterday)
+    return write_raw(cfg.raw_root, landings)
 
 
 # --- transform + load (reference transform.py:161-240) ----------------
@@ -156,18 +159,35 @@ def _warehouse_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame | None:
         return None  # directory exists but holds no data yet
 
 
+def _wide_by_day(flat: DataFrame, data_types: tuple[str, ...]) -> DataFrame:
+    """J1 over one relation: fold per-type rows into one wide row per
+    day with ``max(when(data_type = t, c))`` per type and column. Keys
+    are unique per ``(data_type, day)`` by then, so each aggregate sees
+    at most one value; a type missing on a day yields NULLs, exactly as
+    the full-outer combine (``combine_on_key``) would."""
+    values = [c for c in flat.columns if c not in ("data_type", "day")]
+    return flat.groupBy("day").agg(
+        *[
+            F.max(F.when(F.col("data_type") == t, F.col(c))).alias(f"{t}__{c}")
+            for t in data_types
+            for c in values
+        ]
+    )
+
+
 def run_transform(
     spark: SparkSession, cfg: PipelineConfig, today: dt.date
 ) -> dict[str, int]:
     """Combine new raw days into wide rows and append to the warehouse.
 
-    Per type: pruned raw scan (S6/P2) -> required-key filter (P1) ->
-    duplicate-day conflict check (J3, validate-then-act) -> flatten with
-    boundary JSON arrays (F1/F4) -> namespace prefix (P3). Then one
-    multi-way full-outer combine (J1), schema alignment (C1-C3/C5, which
-    also performs the F2/F3 string->date/timestamp coercions via typed
-    casts), and an append (S7). Late data — anything ≤ the warehouse
-    watermark — is never re-read (transform.py:187).
+    One pruned raw scan over all types (S6/P2) -> required-key filter
+    (P1) -> one ``(data_type, day)`` conflict check (J3, validate-then-
+    act; it also counts the keys, so an empty window exits early) ->
+    flatten with boundary JSON arrays (F1/F4) -> one ``groupBy("day")``
+    into ``{type}__{column}`` wide rows (P3 + J1) -> schema alignment
+    (C1-C3/C5, which also performs the F2/F3 string->date/timestamp
+    coercions via typed casts) -> append (S7). Late data — anything ≤
+    the warehouse watermark — is never re-read (transform.py:187).
     """
     existing = _warehouse_df(spark, cfg)
     if existing is not None:
@@ -181,22 +201,17 @@ def run_transform(
     )
     end_excl = today  # through yesterday, half-open
 
-    frames = []
-    for dtype in cfg.data_types:
-        raw = scan_raw(spark, cfg.raw_root, dtype, start, end_excl, RECORD_SCHEMA)
-        raw = raw.where(F.col("day").isNotNull())  # P1
-        assert_unique_key(raw, "day")  # J3: fail before any write
-        flat = flatten(raw, arrays="json")  # F1 + F4
-        frames.append(prefix_columns(flat, dtype, exclude=("day",)))
+    raw = scan_raw(spark, cfg.raw_root, cfg.data_types, start, end_excl, RECORD_SCHEMA)
+    raw = raw.where(F.col("day").isNotNull())  # P1
+    # J3: fail before any write; zero keys is the early exit
+    # (transform.py:192-194)
+    if not assert_unique_key(raw, ("data_type", "day")):
+        return {"new_rows": 0}
 
-    combined = combine_on_key(frames, key="day")  # J1
-    if not combined.head(1):
-        return {"new_rows": 0}  # early exit (transform.py:192-194)
-
-    target = warehouse_schema(cfg.data_types)
-    aligned = align_to_schema(combined, target)  # C1-C3/C5 (+F2/F3 casts)
+    wide = _wide_by_day(flatten(raw, arrays="json"), cfg.data_types)  # F1 + F4
+    aligned = align_to_schema(wide, warehouse_schema(cfg.data_types))
     # The count rides along the write as an observed metric: the
-    # scan->flatten->combine->align lineage executes exactly once (a
+    # scan->flatten->fold->align lineage executes exactly once (a
     # .count() after the write would re-run the whole DAG — at scale
     # that doubles the most expensive job in the pipeline).
     obs = Observation()

@@ -17,7 +17,9 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -47,6 +49,8 @@ RECORD_SCHEMA = StructType(
         StructField("met_items", ArrayType(DoubleType())),
     ]
 )
+
+_RECORD_ARROW_SCHEMA = to_arrow_schema(RECORD_SCHEMA)
 
 
 def _h(data_type: str, day: dt.date, salt: str) -> int:
@@ -88,8 +92,16 @@ def fetch_range(data_type: str, start: dt.date, end: dt.date) -> list[dict]:
 def fetch_range_df(
     spark: SparkSession, data_type: str, start: dt.date, end: dt.date
 ) -> DataFrame:
-    """The fixture source as a typed DataFrame (what S1-S3 hand on)."""
-    return spark.createDataFrame(fetch_range(data_type, start, end), RECORD_SCHEMA)
+    """The fixture source as a typed DataFrame (what S1-S3 hand on).
+
+    The records the driver already holds go to Spark as one Arrow table
+    typed by ``RECORD_SCHEMA``: a local relation (``LocalTableScan``),
+    so landing them needs no Python worker and no parallelize stage.
+    """
+    table = pa.Table.from_pylist(
+        fetch_range(data_type, start, end), schema=_RECORD_ARROW_SCHEMA
+    )
+    return spark.createDataFrame(table, RECORD_SCHEMA)
 
 
 # --- FULL-WIDTH daily fixtures: every field of every DAILY type -------

@@ -574,13 +574,13 @@ def s6_raw_zone_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     source and LANDED as range-partitioned JSON
     (``data_type=…/range_start=…/range_end=…`` — the reference's path
     scheme as Hive partitions, `load.py:51-57`/`constants.py:55`);
-    ``scan_raw`` then reads the half-open window {RAW_SCAN} — the
-    overlap predicate prunes partitions BEFORE any file opens (plan-
-    gated in tests), the day filter trims inside kept ranges. The
-    oracle regenerates exactly the surviving days from the fixture's
-    sha256 arithmetic, so hash equality certifies land + prune + trim
-    + the JSON round trip in one frame. ``sf_dir`` is unused (source-
-    layer certification, like ``j13_heartrate_chunked``)."""
+    ``scan_raw`` then reads the half-open window {RAW_SCAN} — only the
+    overlapping partition directories, picked from the driver listing,
+    are ever opened (gated in tests), the day filter trims inside kept
+    ranges. The oracle regenerates exactly the surviving days from the
+    fixture's sha256 arithmetic, so hash equality certifies land +
+    prune + trim + the JSON round trip in one frame. ``sf_dir`` is
+    unused (source-layer certification, like ``j13_heartrate_chunked``)."""
     import datetime as dt
 
     from personal_health_etl_pipeline_spark.pipeline.fixtures import (
@@ -596,11 +596,8 @@ def s6_raw_zone_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s, e in RAW_RANGES:
         s_d, e_d = dt.date.fromisoformat(s), dt.date.fromisoformat(e)
         write_raw(
-            fetch_range_df(spark, "daily_activity", s_d, e_d),
             root,
-            "daily_activity",
-            s_d,
-            e_d,
+            {"daily_activity": (fetch_range_df(spark, "daily_activity", s_d, e_d), s_d, e_d)},
         )
     lo, hi = (dt.date.fromisoformat(x) for x in RAW_SCAN)
     raw = scan_raw(spark, root, "daily_activity", lo, hi, RECORD_SCHEMA)

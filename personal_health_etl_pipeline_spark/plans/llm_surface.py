@@ -1305,6 +1305,17 @@ def _pq_file_plan(n_rows: int) -> tuple[int, int]:
     )
     return codes_files, vec_parts
 
+
+def _to_partitions(df: DataFrame, n: int) -> DataFrame:
+    """``df`` with exactly ``n`` partitions, so a planned file count is
+    enforced in both directions: ``coalesce`` when shrinking (no
+    shuffle), ``repartition`` when growing (``coalesce`` cannot add
+    partitions, and files would outgrow their size target)."""
+    if n > df.rdd.getNumPartitions():
+        return df.repartition(n)
+    return df.coalesce(n)
+
+
 _PQ_INDEX_MEMO: dict[tuple[str, str], tuple[str, list[list[int]]]] = {}
 
 
@@ -1413,7 +1424,7 @@ def _pq_index_root(
     # moves only what the write was already serializing.
     n_rows = codes.count()
     n_files, n_vec_parts = _pq_file_plan(n_rows)
-    codes.select("_id", "codes").coalesce(n_files).write.mode(
+    _to_partitions(codes.select("_id", "codes"), n_files).write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "codes"))
     vec = codes.select(

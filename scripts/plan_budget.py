@@ -153,11 +153,14 @@ def write_ledger(
     """(Re)pin the ledger. A full walk REPLACES it; a subset walk
     (``--only``) MERGES into the existing file so the other entries'
     pins survive — the subset must never silently truncate the
-    268-entry ledger (VERDICT-r15 item 9)."""
+    268-entry ledger (VERDICT-r15 item 9). A subset write with no
+    ledger on disk yet starts from empty entries."""
     entries = current
     if only:
-        with open(path) as f:
-            entries = json.load(f)["entries"]
+        entries = {}
+        if os.path.exists(path):
+            with open(path) as f:
+                entries = json.load(f)["entries"]
         entries.update(current)
         print(f"merging {len(current)} re-pinned entries into ledger")
     with open(path, "w") as f:

@@ -108,7 +108,7 @@ def test_combine_rejects_column_collision(spark):
 
 def test_assert_unique_key(spark):
     ok = spark.createDataFrame([("d1",), ("d2",)], "day string")
-    assert_unique_key(ok, "day")  # no raise
+    assert assert_unique_key(ok, "day") == 2  # no raise; distinct keys
     dup = spark.createDataFrame([("d1",), ("d1",), ("d2",)], "day string")
     with pytest.raises(DuplicateKeyError, match="d1"):
         assert_unique_key(dup, "day")

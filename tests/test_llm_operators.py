@@ -913,6 +913,21 @@ class TestPQFilePlan:
         assert vec_parts >= 64 > PQ_PERS_BUCKETS
         assert n * PQ_VEC_ROW_BYTES <= vec_parts * PQ_TARGET_FILE_BYTES
 
+    def test_file_count_enforced_when_growing_and_shrinking(self, spark):
+        from personal_health_etl_pipeline_spark.plans.llm_surface import (
+            _to_partitions,
+        )
+
+        df = spark.range(0, 1000, numPartitions=4)
+        grown = _to_partitions(df, 9)
+        assert grown.rdd.getNumPartitions() == 9
+        shrunk = _to_partitions(df, 2)
+        assert shrunk.rdd.getNumPartitions() == 2
+        # shrinking merges partitions in place: no shuffle is planned
+        assert "Exchange" not in shrunk._jdf.queryExecution().executedPlan().toString()
+        assert sorted(r.id for r in grown.collect()) == list(range(1000))
+        assert sorted(r.id for r in shrunk.collect()) == list(range(1000))
+
     def test_range_branch_scales_files_and_preserves_probe(
         self, spark, monkeypatch
     ):

@@ -60,6 +60,22 @@ class TestExtract:
         # same day again: nothing to do
         assert run_extract(spark, cfg, TODAY + dt.timedelta(days=1)) == {}
 
+    def test_empty_type_still_marks_its_range(self, spark, tmp_path):
+        cfg = _cfg(tmp_path)
+
+        def source(spark, dtype, start, end):
+            if dtype == "daily_sleep":
+                return spark.createDataFrame([], RECORD_SCHEMA)
+            return fetch_range_df(spark, dtype, start, end)
+
+        landed = run_extract(spark, cfg, TODAY, source=source)
+        assert landed == {t: 0 if t == "daily_sleep" else 10 for t in cfg.data_types}
+        # the empty range is processed: the next run starts after it
+        assert max_landed_date(cfg.raw_root, "daily_sleep") == TODAY - dt.timedelta(1)
+        assert run_extract(spark, cfg, TODAY + dt.timedelta(days=1)) == {
+            t: 1 for t in cfg.data_types
+        }
+
     def test_chunked_extraction_equals_unchunked(self, spark, tmp_path):
         cfg = _cfg(tmp_path, data_types=("heartrate",), chunk_days={"heartrate": 3})
         run_extract(spark, cfg, TODAY)
@@ -80,30 +96,36 @@ class TestRawZone:
         root = str(tmp_path / "raw")
         jan = fetch_range_df(spark, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 7))
         feb = fetch_range_df(spark, "daily_sleep", dt.date(2024, 2, 1), dt.date(2024, 2, 7))
-        write_raw(jan, root, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 7))
-        write_raw(feb, root, "daily_sleep", dt.date(2024, 2, 1), dt.date(2024, 2, 7))
+        write_raw(root, {"daily_sleep": (jan, dt.date(2024, 1, 1), dt.date(2024, 1, 7))})
+        write_raw(root, {"daily_sleep": (feb, dt.date(2024, 2, 1), dt.date(2024, 2, 7))})
 
         got = scan_raw(
             spark, root, "daily_sleep", dt.date(2024, 2, 1), dt.date(2024, 2, 4), RECORD_SCHEMA
         )
         days = sorted(r["day"] for r in got.collect())
         assert days == ["2024-02-01", "2024-02-02", "2024-02-03"]
-        # partition pruning: the January range never enters the plan
+        # partition pruning: the scan reads partition directories ...
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "range_start" in plan  # partition filter present
+        assert "range_start" in plan
+        # ... and no January file is ever opened
+        files = got.inputFiles()
+        assert files and all("range_start=2024-02-01" in f for f in files)
+        assert not any("range_start=2024-01" in f for f in files)
 
     def test_overlapping_ranges_raise(self, spark, tmp_path):
         root = str(tmp_path / "raw")
         df = fetch_range_df(spark, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 7))
-        write_raw(df, root, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 7))
-        write_raw(df, root, "daily_sleep", dt.date(2024, 1, 5), dt.date(2024, 1, 9))
+        write_raw(root, {"daily_sleep": (df, dt.date(2024, 1, 1), dt.date(2024, 1, 7))})
+        write_raw(root, {"daily_sleep": (df, dt.date(2024, 1, 5), dt.date(2024, 1, 9))})
         with pytest.raises(OverlappingRangeError):
             landed_ranges(root, "daily_sleep")
 
     def test_empty_extraction_is_processed_marker(self, spark, tmp_path):
         root = str(tmp_path / "raw")
         empty = spark.createDataFrame([], RECORD_SCHEMA)
-        write_raw(empty, root, "daily_sleep", dt.date(2024, 1, 1), dt.date(2024, 1, 2))
+        assert write_raw(
+            root, {"daily_sleep": (empty, dt.date(2024, 1, 1), dt.date(2024, 1, 2))}
+        ) == {"daily_sleep": 0}
         # the range counts as landed (watermark advances past it) ...
         assert max_landed_date(root, "daily_sleep") == dt.date(2024, 1, 2)
         # ... and scanning it yields zero rows, not an error
@@ -155,30 +177,130 @@ class TestTransformLoad:
         df = fetch_range_df(spark, "daily_sleep", dup_day, dup_day)
         # land the same day twice in two disjoint ranges (ranges don't
         # overlap, but the *row* appears in both -> J3 must fire)
-        write_raw(df, cfg.raw_root, "daily_sleep", dup_day, dup_day)
+        write_raw(cfg.raw_root, {"daily_sleep": (df, dup_day, dup_day)})
+        nxt = dup_day + dt.timedelta(days=1)
         write_raw(
-            df.withColumn("day", F.lit(dup_day.isoformat())),
             cfg.raw_root,
-            "daily_sleep",
-            dup_day + dt.timedelta(days=1),
-            dup_day + dt.timedelta(days=1),
+            {"daily_sleep": (df.withColumn("day", F.lit(dup_day.isoformat())), nxt, nxt)},
         )
-        for dtype in cfg.data_types:
-            if dtype == "daily_sleep":
-                continue
-            write_raw(
-                fetch_range_df(spark, dtype, dup_day, dup_day),
-                cfg.raw_root,
-                dtype,
-                dup_day,
-                dup_day,
-            )
+        write_raw(
+            cfg.raw_root,
+            {
+                dtype: (fetch_range_df(spark, dtype, dup_day, dup_day), dup_day, dup_day)
+                for dtype in cfg.data_types
+                if dtype != "daily_sleep"
+            },
+        )
         with pytest.raises(DuplicateKeyError):
             run_transform(spark, cfg, TODAY)
         # validate-then-act: nothing was written
         import os
 
         assert not os.path.isdir(cfg.warehouse_path)
+
+
+class TestFailBeforeWrite:
+    """Every type's ranges and keys are checked before anything lands:
+    a bad later type stops the whole run, not just its own slice."""
+
+    def test_overlap_in_later_type_lands_nothing(self, spark, tmp_path):
+        import os
+
+        cfg = _cfg(tmp_path)
+        run_extract(spark, cfg, TODAY)
+        # a stray range of the LAST type overlapping its landed history
+        last = cfg.data_types[-1]
+        stray = f"{cfg.raw_root}/data_type={last}/range_start=2024-02-28/range_end=2024-03-05"
+        os.makedirs(stray)
+        open(f"{stray}/_SUCCESS", "w").close()
+
+        def snapshot():
+            return sorted(
+                os.path.join(d, n) for d, _, names in os.walk(cfg.raw_root) for n in names
+            )
+
+        before = snapshot()
+        with pytest.raises(OverlappingRangeError, match=last):
+            run_extract(spark, cfg, TODAY + dt.timedelta(days=2))
+        assert snapshot() == before
+
+    def test_duplicate_in_any_type_cites_type_and_day(self, spark, tmp_path):
+        import os
+
+        cfg = _cfg(tmp_path)
+        run_extract(spark, cfg, TODAY)
+        # the last type re-lands an already-landed day in a new range
+        last, dup_day, nxt = cfg.data_types[-1], dt.date(2024, 2, 25), TODAY
+        df = fetch_range_df(spark, last, dup_day, dup_day)
+        write_raw(cfg.raw_root, {last: (df, nxt, nxt)})
+        with pytest.raises(DuplicateKeyError) as err:
+            run_transform(spark, cfg, nxt + dt.timedelta(days=1))
+        assert f"data_type={last!r}" in str(err.value)
+        assert f"day={dup_day.isoformat()!r}" in str(err.value)
+        assert not os.path.isdir(cfg.warehouse_path)
+
+
+class TestRunCostFlatInHistory:
+    """A daily run costs the same number of Spark jobs and tasks over
+    20 or 60 days of landed history: its scan lists only the new day's
+    partitions, so history past Spark's 32-path parallel-listing
+    threshold adds no listing job."""
+
+    MAX_JOBS = 12
+
+    @staticmethod
+    def _land_history(root: str, data_types, first: dt.date, last: dt.date) -> None:
+        """One single-day range per type per day, written in the raw
+        zone's partition layout without Spark."""
+        import json
+        import os
+
+        day = first
+        while day <= last:
+            for dtype in data_types:
+                part = f"{root}/data_type={dtype}/range_start={day}/range_end={day}"
+                os.makedirs(part)
+                with open(f"{part}/part-00000.json", "w") as fh:
+                    for rec in fetch_range(dtype, day, day):
+                        fh.write(json.dumps(rec) + "\n")
+                open(f"{part}/_SUCCESS", "w").close()
+            day += dt.timedelta(days=1)
+
+    def _daily_run_cost(self, spark, tmp_path, history_days: int) -> tuple[int, int]:
+        sc = spark.sparkContext
+        cfg = _cfg(tmp_path / f"h{history_days}", historical_days=history_days)
+        self._land_history(
+            cfg.raw_root,
+            cfg.data_types,
+            TODAY - dt.timedelta(days=history_days),
+            TODAY - dt.timedelta(days=1),
+        )
+        assert run_pipeline(spark, cfg, TODAY)["new_rows"] == history_days
+        group = f"daily-run-cost-{history_days}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run_pipeline(spark, cfg, TODAY + dt.timedelta(days=1))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert out["new_rows"] == 1
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = 0
+        for job_id in jobs:
+            for stage_id in tracker.getJobInfo(job_id).stageIds:
+                st = tracker.getStageInfo(stage_id)
+                if st is not None:
+                    tasks += st.numCompletedTasks + st.numFailedTasks
+        return len(jobs), tasks
+
+    def test_daily_run_cost_is_flat_in_history(self, spark, tmp_path):
+        jobs_20, tasks_20 = self._daily_run_cost(spark, tmp_path, 20)
+        jobs_60, tasks_60 = self._daily_run_cost(spark, tmp_path, 60)
+        assert jobs_20 <= self.MAX_JOBS and jobs_60 <= self.MAX_JOBS
+        assert tasks_60 == tasks_20
 
 
 class TestProbes:

@@ -184,6 +184,15 @@ class TestWriteLedger:
         assert on_disk["n_entries"] == 3
         assert set(on_disk["entries"]) == {"a", "b", "c"}
 
+    def test_subset_write_without_ledger_starts_empty(self, tmp_path):
+        from scripts.plan_budget import write_ledger
+
+        path = str(tmp_path / "ledger.json")
+        out = write_ledger(path, {"a": _counts()}, only=True, sf_dir="sf")
+        assert out == {"a": _counts()}
+        with open(path) as f:
+            assert json.load(f)["entries"] == {"a": _counts()}
+
     def test_full_write_replaces(self, tmp_path):
         from scripts.plan_budget import write_ledger
 

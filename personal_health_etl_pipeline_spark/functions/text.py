@@ -179,15 +179,6 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language stopword hit counts (over distinct tokens)."""
-    toks = distinct_tokens(col)
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
-        for lang, words in STOPWORDS.items()
-    }
-
-
 def lang_id(col: Column | str) -> Column:
     """argmax of stopword scores with deterministic tie-break
     (alphabetical language order); no hits at all -> 'unknown'.

@@ -57,29 +57,13 @@ from personal_health_etl_pipeline_spark.operators.similarity import (
     quantized_centroids,
 )
 
-# argmin over the broadcast centroid array: exact integer squared L2
+# argmin over the inlined centroid array: exact integer squared L2
 # per centroid, ties broken on cluster id by the (d2, cid) struct sort.
 _BEST_EXPR = (
     "array_sort(transform(cs, c -> struct("
     "aggregate(zip_with(_q, c.cvec, (x, y) -> (x - y) * (x - y)),"
     " 0L, (a, x) -> a + x) AS d2, c.cid AS cid)))[0]"
 )
-
-
-def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """Map-side assignment: centroids ride as one broadcast row."""
-    cent_arr = cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("cs"))
-    return (
-        base.crossJoin(F.broadcast(cent_arr))
-        .withColumn("_best", F.expr(_BEST_EXPR))
-        .select(
-            "_id",
-            "_q",
-            "_n2",
-            F.col("_best.cid").alias("cid"),
-            F.col("_best.d2").alias("d2"),
-        )
-    )
 
 
 def _cents_literal(cents: list[tuple[int, list[int]]]):

@@ -206,6 +206,37 @@ def pair_gen_sql(ms: str, cap: int) -> str:
     return f"CASE WHEN size({ms}) <= {cap} THEN {all_pairs} ELSE {chain} END"
 
 
+def _band_members(
+    docs: DataFrame, text_col: str, n_hashes: int, bands: int, shingle_n: int
+) -> DataFrame:
+    """The MinHash sketch of already-spread ``(_id, text_col)`` docs, one
+    row per doc and band: ``(_id, _bands, band_id)``, where ``_bands``
+    is the doc's full band-hash list. Docs too short to shingle drop out.
+    """
+    if n_hashes % bands:
+        raise ValueError("n_hashes must be divisible by bands")
+    # empty-shingle docs are dropped with the tokenizer-only predicate
+    # BELOW the shingle projection — a size filter on the derived
+    # column would re-evaluate the whole shingle expression per row
+    # (see functions.text.has_min_tokens, r16: ~6.5x on this stage)
+    sigs = (
+        docs.where(has_min_tokens(text_col, shingle_n))
+        .select("_id", distinct_shingles(text_col, shingle_n).alias("_sh"))
+        .withColumn("_hs", shingle_hashes(F.col("_sh")))
+        .withColumn("_hm", F.expr(mod_p_sql("_hs")))
+        .select("_id", F.expr(minhash_signature_sql("_hm", n_hashes)).alias("_sig"))
+        .select("_id", F.expr(band_hashes_sql("_sig", n_hashes, bands)).alias("_bands"))
+    )
+    # Explode a LITERAL index sequence, not the _bands column: a
+    # generator whose input references a derived column makes the
+    # optimizer inline the full sketch expression into the Generate
+    # node once per reference (measured 25x slowdown); a literal
+    # sequence generator leaves _bands as a plain attribute.
+    return sigs.select(
+        "_id", "_bands", F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -231,26 +262,10 @@ def minhash_lsh_pairs(
     MEASURED candidate count (see :func:`_gated_candidates`); pass
     ``None`` to force the unconditional hint.
     """
-    if n_hashes % bands:
-        raise ValueError("n_hashes must be divisible by bands")
     docs = spread(
         df.select(F.col(id_col).alias("_id"), F.col(text_col)),
         min_bytes=SKETCH_MIN_BYTES_PER_PARTITION,
     )
-    # empty-shingle docs are dropped with the tokenizer-only predicate
-    # BELOW the shingle projection — a size filter on the derived
-    # column would re-evaluate the whole shingle expression per row
-    # (see functions.text.has_min_tokens, r16: ~6.5x on this stage)
-    base = docs.where(has_min_tokens(text_col, shingle_n)).select(
-        "_id",
-        distinct_shingles(text_col, shingle_n).alias("_sh"),
-    )
-    hashed = base.withColumn("_hs", shingle_hashes(F.col("_sh"))).withColumn(
-        "_hm", F.expr(mod_p_sql("_hs"))
-    )
-    sigs = hashed.select(
-        "_id", F.expr(minhash_signature_sql("_hm", n_hashes)).alias("_sig")
-    ).select("_id", F.expr(band_hashes_sql("_sig", n_hashes, bands)).alias("_bands"))
     # lean banding: only (id, band-hash list) enters the shuffle — the
     # sketch pipeline runs ONCE (a self-join would evaluate it per
     # side), and candidate pairs come from grouped bucket members, not a
@@ -259,14 +274,7 @@ def minhash_lsh_pairs(
     # candidate set; without one, a pair colliding in several bands is
     # emitted only in its FIRST matching band (each member carries its
     # band-hash list), so no dedup shuffle is needed at all.
-    # Explode a LITERAL index sequence, not the _bands column: a
-    # generator whose input references a derived column makes the
-    # optimizer inline the full sketch expression into the Generate
-    # node once per reference (measured 25x slowdown); a literal
-    # sequence generator leaves _bands as a plain attribute.
-    banded = sigs.select(
-        "_id", "_bands", F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id")
-    )
+    banded = _band_members(docs, text_col, n_hashes, bands, shingle_n)
     if bucket_cap is None:
         # first-matching-band dedup needs every member's full band list
         # in the bucket, so the struct carries it
@@ -701,25 +709,13 @@ def minhash_index(
     no shuffle (the write's partitioning is the caller's choice;
     bucketing by (band_id, band_hash) makes later probes co-located).
     """
-    if n_hashes % bands:
-        raise ValueError("n_hashes must be divisible by bands")
-    base = spread(
+    docs = spread(
         df.select(F.col(id_col).alias("_id"), F.col(text_col)),
         min_bytes=SKETCH_MIN_BYTES_PER_PARTITION,
-    ).where(has_min_tokens(text_col, shingle_n)).select(
-        "_id", distinct_shingles(text_col, shingle_n).alias("_sh")
     )
-    sigs = (
-        base.withColumn("_hs", shingle_hashes(F.col("_sh")))
-        .withColumn("_hm", F.expr(mod_p_sql("_hs")))
-        .select("_id", F.expr(minhash_signature_sql("_hm", n_hashes)).alias("_sig"))
-        .select("_id", F.expr(band_hashes_sql("_sig", n_hashes, bands)).alias("_bands"))
+    return _band_members(docs, text_col, n_hashes, bands, shingle_n).select(
+        "band_id", F.expr("_bands[band_id]").alias("band_hash"), "_id"
     )
-    return sigs.select(
-        "_id",
-        "_bands",
-        F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id"),
-    ).select("band_id", F.expr("_bands[band_id]").alias("band_hash"), "_id")
 
 
 def minhash_lookup(

@@ -195,12 +195,6 @@ def lsh_bucket_sql(vec_sql: str, signs: list[list[int]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def lsh_bucket(q_vec_sql: str, signs: list[list[int]]) -> Column:
-    """Bucket id column (see ``lsh_bucket_sql``); takes the *SQL name*
-    of the quantized vector column."""
-    return F.expr(lsh_bucket_sql(q_vec_sql, signs))
-
-
 def lsh_topk(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -456,15 +450,6 @@ def quantized_centroids(base: DataFrame, label_col: str = "label") -> DataFrame:
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "cv"))), lambda s: s["cv"]
         ).alias("cvec")
-    )
-
-
-def dist2_int(a: Column, b: Column) -> Column:
-    """Exact squared L2 distance between integer-grid vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
     )
 
 

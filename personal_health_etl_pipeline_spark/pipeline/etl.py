@@ -151,12 +151,14 @@ def run_extract(
 # --- transform + load (reference transform.py:161-240) ----------------
 
 def _warehouse_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame | None:
-    if not os.path.isdir(cfg.warehouse_path):
+    """The warehouse, or None while its directory is missing or holds no
+    data file (Spark's ``_``/``.`` markers only). Any other read error
+    propagates: taken as "no warehouse", it would reset the watermark
+    and re-append the whole history window."""
+    path = cfg.warehouse_path
+    if not os.path.isdir(path) or all(n.startswith(("_", ".")) for n in os.listdir(path)):
         return None
-    try:
-        return spark.read.parquet(cfg.warehouse_path)
-    except Exception:
-        return None  # directory exists but holds no data yet
+    return spark.read.parquet(path)
 
 
 def _wide_by_day(flat: DataFrame, data_types: tuple[str, ...]) -> DataFrame:

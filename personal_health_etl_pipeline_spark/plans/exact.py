@@ -40,11 +40,6 @@ def exact_sum(expr: Column, round_to: int = 2) -> Column:
     return F.round(F.sum(expr).cast("double"), round_to)
 
 
-def exact_avg(expr: Column, round_to: int = 6) -> Column:
-    """Order-independent mean: exact decimal sum / count, in double."""
-    return F.round(F.sum(expr).cast("double") / F.count(expr), round_to)
-
-
 # --- DuckDB oracle-side renderings (same math, same rounding) --------
 
 def od2(expr: str) -> str:

@@ -86,13 +86,3 @@ def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
             # vanilla harness session).
             df = df.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` queries work."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -37,8 +37,9 @@ Usage:  python scripts/bench_regress.py OLD.json NEW.json
                                         [--rename=old=new ...]
 Exit status: 0 clean; 1 regression flags on a stable calib window, a
 bad --rename declaration, or undeclared drop+add coexistence; 2
-regression flags with calib moved >20% (window-suspect — adjudicate
-with scripts/quiet_probe.py before treating as a code regression).
+regression flags with calib moved >20% (window-suspect — re-run both
+sides on the same box, alternating their order, before treating it as
+a code regression).
 """
 
 from __future__ import annotations
@@ -194,7 +195,8 @@ def main(argv: list[str]) -> int:
             "WINDOW-SUSPECT: machine_calib moved >"
             f"{int(CALIB_SUSPECT * 100)}% — the flags above are "
             "annotated, not suppressed; first-screen verdict is the "
-            "box, not the code. Adjudicate with scripts/quiet_probe.py."
+            "box, not the code. Re-run both sides on the same box, "
+            "alternating their order."
         )
         return 2
     return 1

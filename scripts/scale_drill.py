@@ -263,8 +263,8 @@ NOTES = {
     "artifact_builds_measured_r13": (
         "the two largest artifact-build lines in the r12 sf1 drill "
         "(llm.pq_index 6.67x, llm.pq_probe_batch 4.28x at 10x rows) "
-        "are stage-attributed by scripts/pq_build_stages.py (one "
-        "session, warm pass, both sfs; r13 run): pq_index is "
+        "were stage-attributed in one session (warm pass, both "
+        "sfs; r13 run): pq_index is "
         "DOMINATED by the per-row ADC code assignment "
         "(_pq_data_codes_expr: m_sub x PQ_K distance evals per "
         "vector, JVM codegen) at 2.35 s -> 20.9 s = x8.89, with the "

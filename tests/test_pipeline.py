@@ -27,7 +27,8 @@ from personal_health_etl_pipeline_spark.pipeline import (
     warehouse_has_day,
     write_raw,
 )
-from personal_health_etl_pipeline_spark.pipeline.etl import warehouse_schema
+from personal_health_etl_pipeline_spark.pipeline import etl
+from personal_health_etl_pipeline_spark.pipeline.etl import truncate_warehouse, warehouse_schema
 from personal_health_etl_pipeline_spark.pipeline.fixtures import (
     RECORD_SCHEMA,
     fetch_range,
@@ -313,6 +314,118 @@ class TestProbes:
         assert warehouse_distinct_days(spark, cfg).count() == 10
         assert warehouse_has_day(spark, cfg, TODAY - dt.timedelta(days=1))
         assert not warehouse_has_day(spark, cfg, TODAY)
+
+
+def _days(first: dt.date, last: dt.date) -> list[dt.date]:
+    return [first + dt.timedelta(days=i) for i in range((last - first).days + 1)]
+
+
+def _warehouse_days(spark, cfg) -> list[dt.date]:
+    """Every warehouse row's day, sorted, duplicates kept."""
+    import os
+
+    if not os.path.isdir(cfg.warehouse_path):
+        return []
+    return sorted(r.day for r in spark.read.parquet(cfg.warehouse_path).select("day").collect())
+
+
+class TestWarehouseRead:
+    def test_unreadable_file_fails_the_run_instead_of_reloading_history(
+        self, spark, tmp_path
+    ):
+        """Only a missing or data-less warehouse means "no watermark"; an
+        unreadable file must not reset it and re-append the window."""
+        import os
+
+        cfg = _cfg(tmp_path, historical_days=4)
+        assert run_pipeline(spark, cfg, TODAY)["new_rows"] == 5
+        before = _warehouse_days(spark, cfg)
+        stray = os.path.join(cfg.warehouse_path, "a-garbage.parquet")
+        with open(stray, "wb") as fh:
+            fh.write(b"not parquet")
+        with pytest.raises(Exception, match="a-garbage.parquet"):
+            run_pipeline(spark, cfg, TODAY + dt.timedelta(days=1))
+        os.remove(stray)
+        assert _warehouse_days(spark, cfg) == before
+
+    def test_truncate_then_run_reloads_the_window(self, spark, tmp_path):
+        cfg = _cfg(tmp_path, historical_days=4)
+        run_pipeline(spark, cfg, TODAY)
+        truncate_warehouse(spark, cfg)
+        assert warehouse_distinct_days(spark, cfg).count() == 0
+        assert run_transform(spark, cfg, TODAY) == {"new_rows": 5}
+        assert _warehouse_days(spark, cfg) == _days(
+            TODAY - dt.timedelta(days=5), TODAY - dt.timedelta(days=1)
+        )
+
+
+class TestFailureDrill:
+    """The daily ETL lands each day exactly once across a failure
+    between extract and transform, a failure in the middle of the
+    warehouse append, and a rerun of the same day."""
+
+    def test_each_day_lands_once_across_failures_and_reruns(
+        self, spark, tmp_path, monkeypatch
+    ):
+        cfg = _cfg(tmp_path, historical_days=3)
+        first = TODAY - dt.timedelta(days=4)
+        watermarks = []
+
+        def check(today: dt.date, loaded_through: dt.date | None) -> None:
+            days = _warehouse_days(spark, cfg)
+            # one row per day, no duplicates, no gaps
+            assert days == (_days(first, loaded_through) if loaded_through else [])
+            watermarks.append(days[-1] if days else dt.date.min)
+            assert watermarks == sorted(watermarks)  # never goes backwards
+            for dtype in cfg.data_types:
+                assert max_landed_date(cfg.raw_root, dtype) == today - dt.timedelta(1)
+
+        # 1. transform fails once after extract has landed, then rerun
+        real_transform = etl.run_transform
+        failed = []
+
+        def transform_fails_once(*args, **kwargs):
+            if not failed:
+                failed.append(True)
+                raise RuntimeError("injected transform failure")
+            return real_transform(*args, **kwargs)
+
+        monkeypatch.setattr(etl, "run_transform", transform_fails_once)
+        with pytest.raises(RuntimeError, match="injected transform"):
+            run_pipeline(spark, cfg, TODAY)
+        check(TODAY, None)
+        out = run_pipeline(spark, cfg, TODAY)
+        assert out["extracted"] == {} and out["new_rows"] == 4
+        check(TODAY, TODAY - dt.timedelta(1))
+
+        # 2. the warehouse append fails mid-job on one of two new days
+        later = TODAY + dt.timedelta(days=2)
+        bad_day = TODAY + dt.timedelta(days=1)
+        real_align = etl.align_to_schema
+
+        def align_then_fail_on_bad_day(df, schema):
+            aligned = real_align(df, schema)
+            return aligned.withColumn(
+                "day",
+                F.when(
+                    F.col("day") == F.lit(bad_day),
+                    F.raise_error(F.lit("injected append failure")),
+                ).otherwise(F.col("day")),
+            )
+
+        monkeypatch.setattr(etl, "align_to_schema", align_then_fail_on_bad_day)
+        with pytest.raises(Exception, match="injected append failure"):
+            run_pipeline(spark, cfg, later)
+        check(later, TODAY - dt.timedelta(1))
+        monkeypatch.setattr(etl, "align_to_schema", real_align)
+        out = run_pipeline(spark, cfg, later)
+        assert out["extracted"] == {} and out["new_rows"] == 2
+        check(later, later - dt.timedelta(1))
+
+        # 3. rerun of the same day: nothing lands twice
+        out = run_pipeline(spark, cfg, later)
+        assert out == {"extracted": {}, "new_rows": 0}
+        check(later, later - dt.timedelta(1))
 
 
 class TestSingleExecution:

@@ -4,8 +4,10 @@ The reference flattens nested dicts into ``parent__child`` columns with a
 recursive Python walk and serializes any list it meets to a JSON string
 (reference ``transform.py:38-52`` — ``flatten_dict``). Here the same
 semantics are a *pure projection* over a typed ``StructType``: Catalyst
-sees ``col("a.b.c").alias("a__b__c")``, so flattening costs nothing at
-runtime (no UDF, no shuffle) and column pruning still reaches the scan.
+sees ``a.b.c AS a__b__c``, so flattening costs nothing at runtime (no
+UDF, no shuffle) and column pruning still reaches the scan. The
+projection is built as SQL text (``functions.sqltext``), one ``selectExpr``
+call however many leaves, with every name backtick-quoted.
 
 Two array modes:
 
@@ -18,22 +20,23 @@ Two array modes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StructType
+
+from personal_health_etl_pipeline_spark.functions.sqltext import quote_ident
 
 SEP = "__"
 
 
 def _flatten_field(
-    col: Column, dtype, name: str, arrays: str, sep: str
-) -> list[tuple[str, Column]]:
+    expr: str, dtype, name: str, arrays: str, sep: str
+) -> list[tuple[str, str]]:
     if isinstance(dtype, StructType):
-        out: list[tuple[str, Column]] = []
+        out: list[tuple[str, str]] = []
         for field in dtype.fields:
             out.extend(
                 _flatten_field(
-                    col.getField(field.name),
+                    f"{expr}.{quote_ident(field.name)}",
                     field.dataType,
                     f"{name}{sep}{field.name}",
                     arrays,
@@ -42,8 +45,8 @@ def _flatten_field(
             )
         return out
     if isinstance(dtype, ArrayType) and arrays == "json":
-        return [(name, F.to_json(col))]
-    return [(name, col)]
+        return [(name, f"to_json({expr})")]
+    return [(name, expr)]
 
 
 def flatten(
@@ -61,14 +64,14 @@ def flatten(
     """
     if arrays not in ("keep", "json"):
         raise ValueError(f"arrays must be 'keep' or 'json', got {arrays!r}")
-    cols: list[Column] = []
+    exprs: list[str] = []
     for field in df.schema.fields:
-        for name, col in _flatten_field(
-            F.col(field.name), field.dataType, field.name, arrays, sep
+        for name, expr in _flatten_field(
+            quote_ident(field.name), field.dataType, field.name, arrays, sep
         ):
             full = f"{prefix}{sep}{name}" if prefix else name
-            cols.append(col.alias(full))
-    return df.select(cols)
+            exprs.append(f"{expr} AS {quote_ident(full)}")
+    return df.selectExpr(*exprs)
 
 
 def prefix_columns(
@@ -80,11 +83,9 @@ def prefix_columns(
     column of a per-data-type frame is prefixed with the data type name
     before the multi-way combine join.
     """
-    return df.select(
-        [
-            F.col(c).alias(c if c in exclude else f"{prefix}{sep}{c}")
-            for c in df.columns
-        ]
+    renamed = {c: c if c in exclude else f"{prefix}{sep}{c}" for c in df.columns}
+    return df.selectExpr(
+        *[f"{quote_ident(c)} AS {quote_ident(new)}" for c, new in renamed.items()]
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from personal_health_etl_pipeline_spark.functions.flatten import flatten
+from personal_health_etl_pipeline_spark.functions.sqltext import quote_ident, sql_string
 # not called by the run any more (``_wide_by_day`` folds the types), but
 # kept importable here: the etl_daily benchmark traces this name
 from personal_health_etl_pipeline_spark.operators.combine import combine_on_key  # noqa: F401
@@ -151,29 +152,37 @@ def run_extract(
 # --- transform + load (reference transform.py:161-240) ----------------
 
 def _warehouse_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame | None:
-    """The warehouse, or None while its directory is missing or holds no
-    data file (Spark's ``_``/``.`` markers only). Any other read error
-    propagates: taken as "no warehouse", it would reset the watermark
-    and re-append the whole history window."""
+    """The warehouse's ``day`` column, or None while its directory is
+    missing or holds no data file (Spark's ``_``/``.`` markers only).
+    Any other read error propagates: taken as "no warehouse", it would
+    reset the watermark and re-append the whole history window. The
+    schema is declared, so the read starts no schema-inference job."""
     path = cfg.warehouse_path
     if not os.path.isdir(path) or all(n.startswith(("_", ".")) for n in os.listdir(path)):
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema("day DATE").parquet(path)
 
 
 def _wide_by_day(flat: DataFrame, data_types: tuple[str, ...]) -> DataFrame:
     """J1 over one relation: fold per-type rows into one wide row per
-    day with ``max(when(data_type = t, c))`` per type and column. Keys
-    are unique per ``(data_type, day)`` by then, so each aggregate sees
-    at most one value; a type missing on a day yields NULLs, exactly as
-    the full-outer combine (``combine_on_key``) would."""
+    day with ``max(CASE WHEN data_type = t THEN c END)`` per type and
+    column. Keys are unique per ``(data_type, day)`` by then, so each
+    aggregate sees at most one value; a type missing on a day yields
+    NULLs, exactly as the full-outer combine (``combine_on_key``) would.
+
+    The aggregate is one SQL text (``functions.sqltext``): a few
+    py4j calls instead of a ``Column`` chain per type and column."""
     values = [c for c in flat.columns if c not in ("data_type", "day")]
-    return flat.groupBy("day").agg(
-        *[
-            F.max(F.when(F.col("data_type") == t, F.col(c))).alias(f"{t}__{c}")
-            for t in data_types
-            for c in values
-        ]
+    folds = ", ".join(
+        f"max(CASE WHEN `data_type` = {sql_string(t)} THEN {quote_ident(c)} END)"
+        f" AS {quote_ident(f'{t}__{c}')}"
+        for t in data_types
+        for c in values
+    )
+    # spark.sql formats the text with str.format: keep literal braces
+    folds = folds.replace("{", "{{").replace("}", "}}")
+    return flat.sparkSession.sql(
+        f"SELECT `day`, {folds} FROM {{flat}} GROUP BY `day`", flat=flat
     )
 
 

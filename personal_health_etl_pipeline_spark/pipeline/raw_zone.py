@@ -20,8 +20,13 @@ directions of traffic work from that listing.
   ride along the write as observed metrics.
 * :func:`scan_raw` hands the reader exactly the partition directories
   that overlap the window, for every requested type at once. There is
-  no glob, so Spark never starts a file-listing job over the history:
-  the cost of a daily scan follows the new day, not the landed past.
+  no glob, so the landed past is never listed: the cost of a daily
+  scan follows the new day. Up to Spark's 32-path
+  ``parallelPartitionDiscovery.threshold`` Spark lists the directories
+  without a job; a longer window (a backfill, a catch-up after
+  ``truncate_warehouse``) starts one listing job, whose task count
+  ``get_spark`` caps at the shuffle-partition count instead of one
+  task per directory.
 
 Files are JSON to mirror the raw-zone format (S5); the scan declares
 the record schema up front (no inference pass). Empty extractions still
@@ -42,6 +47,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from personal_health_etl_pipeline_spark.functions.sqltext import quote_ident, sql_string
 
 _PART_RE = re.compile(
     r"data_type=(?P<dtype>[^/]+)/range_start=(?P<start>\d{4}-\d{2}-\d{2})/"
@@ -73,17 +80,21 @@ def write_raw(
     partition directory, holding only a ``_SUCCESS`` marker.
     """
     tagged = [
-        df.select(
-            *df.columns,
-            F.lit(dtype).alias("data_type"),
-            F.lit(start.isoformat()).alias("range_start"),
-            F.lit(end.isoformat()).alias("range_end"),
+        df.selectExpr(
+            "*",
+            f"{sql_string(dtype)} AS `data_type`",
+            f"{sql_string(start.isoformat())} AS `range_start`",
+            f"{sql_string(end.isoformat())} AS `range_end`",
         )
         for dtype, (df, start, end) in landings.items()
     ]
     obs = Observation()
     reduce(DataFrame.unionByName, tagged).observe(
-        obs, *[F.count_if(F.col("data_type") == t).alias(t) for t in landings]
+        obs,
+        *[
+            F.expr(f"count_if(`data_type` = {sql_string(t)}) AS {quote_ident(t)}")
+            for t in landings
+        ],
     ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
         *_PARTITION_COLUMNS
     ).json(root)
@@ -166,7 +177,8 @@ def scan_raw(
         df = spark.read.schema(full).option("basePath", root).json(paths)
     # ISO date strings compare lexicographically == chronologically, so
     # the filter works whether `day` is a wire string or a date
-    in_range = (F.col("day").cast("string") >= F.lit(start.isoformat())) & (
-        F.col("day").cast("string") < F.lit(end.isoformat())
+    in_range = (
+        f"CAST(`day` AS STRING) >= {sql_string(start.isoformat())}"
+        f" AND CAST(`day` AS STRING) < {sql_string(end.isoformat())}"
     )
     return df.where(in_range).drop("range_start", "range_end")

@@ -10,7 +10,9 @@ by ``load.py:65-89``) and reconciles incoming frames against them:
 * C5 schema-driven type coercion (``transform.py:96-111``)
 
 Here those are set operations on ``StructType`` plus a single
-``select`` projection — one Catalyst pass, no row-at-a-time work.
+projection — one Catalyst pass, no row-at-a-time work. The projection
+is SQL text (one ``selectExpr`` call, not a ``Column`` chain per
+column; see ``functions.sqltext``).
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DataType,
@@ -31,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from personal_health_etl_pipeline_spark.functions.sqltext import quote_ident, sql_type
 
 # BigQuery-style type names -> Spark types (SURVEY.md §1.2)
 _TYPE_MAP: dict[str, DataType] = {
@@ -97,10 +100,10 @@ def align_to_schema(
         raise SchemaError(
             f"DataFrame has columns not in the declared schema: {sorted(extra)}"
         )
-    cols = []
-    for field in target.fields:
-        if field.name in missing:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-    return df.select(cols)
+    return df.selectExpr(
+        *[
+            f"CAST({'NULL' if f.name in missing else quote_ident(f.name)}"
+            f" AS {sql_type(f.dataType)}) AS {quote_ident(f.name)}"
+            for f in target.fields
+        ]
+    )

@@ -13,6 +13,10 @@ at 100 TB and cost nothing locally:
 * **Parquet pushdown/pruning left enabled** — operators are written so
   filters and projections reach the scan (verified in tests via
   ``.explain``).
+* **Listing jobs capped at the shuffle-partition count** — a read of
+  more than 32 paths (a backfill over hundreds of landed raw-zone
+  ranges) starts a listing job; without the cap it runs one task per
+  path.
 """
 
 from __future__ import annotations
@@ -64,6 +68,10 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(shuffle_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DateType,
     DoubleType,
     LongType,
@@ -130,6 +131,108 @@ def test_schema_align_paths(spark):
     extra = spark.createDataFrame([("d1", 5)], "day string, bogus int")
     with pytest.raises(SchemaError, match="bogus"):
         align_to_schema(extra, target)
+
+
+def test_flatten_and_align_quote_odd_names(spark):
+    """Columns named with a dot, a space and a backtick go through the
+    SQL-text projections of ``flatten`` and ``align_to_schema`` (with a
+    null-filled missing column) exactly as through ``Column`` calls."""
+    df = spark.createDataFrame(
+        [(1, ("x", [1, 2]), 2), (2, None, None)],
+        StructType(
+            [
+                StructField("a.b", LongType()),
+                StructField(
+                    "c d",
+                    StructType(
+                        [
+                            StructField("e`f", StringType()),
+                            StructField("g.h", ArrayType(LongType())),
+                        ]
+                    ),
+                ),
+                StructField("i`j", LongType()),
+            ]
+        ),
+    )
+    flat = flatten(df, arrays="json")
+    nested = F.col("`c d`")
+    want = df.select(
+        F.col("`a.b`").alias("a.b"),
+        nested.getField("e`f").alias("c d__e`f"),
+        F.to_json(nested.getField("g.h")).alias("c d__g.h"),
+        F.col("`i``j`").alias("i`j"),
+    )
+    assert flat.schema == want.schema
+    assert flat.collect() == want.collect()
+
+    target = StructType(
+        [
+            StructField("i`j", DoubleType()),
+            StructField("a.b", StringType()),
+            StructField("k l.m", DateType()),
+            StructField("c d__e`f", StringType()),
+            StructField("c d__g.h", StringType()),
+        ]
+    )
+    aligned = align_to_schema(flat, target)
+    want = flat.select(
+        F.col("`i``j`").cast(DoubleType()).alias("i`j"),
+        F.col("`a.b`").cast(StringType()).alias("a.b"),
+        F.lit(None).cast(DateType()).alias("k l.m"),
+        F.col("`c d__e``f`").cast(StringType()).alias("c d__e`f"),
+        F.col("`c d__g.h`").cast(StringType()).alias("c d__g.h"),
+    )
+    assert aligned.schema == want.schema
+    assert aligned.collect() == want.collect()
+    assert prefix_columns(flat, "t.u", exclude=("a.b",)).columns == [
+        "a.b", "t.u__c d__e`f", "t.u__c d__g.h", "t.u__i`j"
+    ]
+
+    # nested and timestamp targets: the cast's type text quotes nested
+    # names and keeps a local-time timestamp whatever the session's
+    # default timestamp type
+    src = spark.createDataFrame(
+        [((1, "2024-01-02 03:04:05"),), (None,)],
+        StructType(
+            [
+                StructField(
+                    "s t",
+                    StructType(
+                        [
+                            StructField("a b:c,d", LongType()),
+                            StructField("e`f", StringType()),
+                        ]
+                    ),
+                )
+            ]
+        ),
+    )
+    target = StructType(
+        [
+            StructField(
+                "s t",
+                StructType(
+                    [
+                        StructField("a b:c,d", DoubleType()),
+                        StructField("e`f", TimestampType()),
+                    ]
+                ),
+            ),
+            StructField("ts", TimestampType()),
+        ]
+    )
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        aligned = align_to_schema(src, target)
+        want = src.select(
+            F.col("`s t`").cast(target["s t"].dataType).alias("s t"),
+            F.lit(None).cast(TimestampType()).alias("ts"),
+        )
+        assert aligned.schema == want.schema == target
+        assert aligned.collect() == want.collect()
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
 
 
 def test_json_schema_converter(tmp_path):

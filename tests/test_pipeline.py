@@ -9,6 +9,7 @@ raw ranges failure, idempotence (running twice loads nothing new).
 from __future__ import annotations
 
 import datetime as dt
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -268,7 +269,6 @@ class TestRunCostFlatInHistory:
             day += dt.timedelta(days=1)
 
     def _daily_run_cost(self, spark, tmp_path, history_days: int) -> tuple[int, int]:
-        sc = spark.sparkContext
         cfg = _cfg(tmp_path / f"h{history_days}", historical_days=history_days)
         self._land_history(
             cfg.raw_root,
@@ -278,30 +278,91 @@ class TestRunCostFlatInHistory:
         )
         assert run_pipeline(spark, cfg, TODAY)["new_rows"] == history_days
         group = f"daily-run-cost-{history_days}"
-        sc.setJobGroup(group, group)
-        try:
+        with _job_group(spark, group):
             out = run_pipeline(spark, cfg, TODAY + dt.timedelta(days=1))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
         assert out["new_rows"] == 1
-        # the status store is fed by the listener bus: drain it first
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        jobs = tracker.getJobIdsForGroup(group)
-        tasks = 0
-        for job_id in jobs:
-            for stage_id in tracker.getJobInfo(job_id).stageIds:
-                st = tracker.getStageInfo(stage_id)
-                if st is not None:
-                    tasks += st.numCompletedTasks + st.numFailedTasks
-        return len(jobs), tasks
+        tasks = _tasks_per_job(spark, group)
+        return len(tasks), sum(tasks)
 
     def test_daily_run_cost_is_flat_in_history(self, spark, tmp_path):
         jobs_20, tasks_20 = self._daily_run_cost(spark, tmp_path, 20)
         jobs_60, tasks_60 = self._daily_run_cost(spark, tmp_path, 60)
         assert jobs_20 <= self.MAX_JOBS and jobs_60 <= self.MAX_JOBS
         assert tasks_60 == tasks_20
+
+
+class TestListingCap:
+    """A scan of more than 32 partition directories (a backfill, or a
+    catch-up after ``truncate_warehouse``) starts one listing job. Its
+    task count follows ``spark.sql.shuffle.partitions``, not the number
+    of landed directories."""
+
+    def test_backfill_listing_job_is_capped(self, spark, tmp_path):
+        root = str(tmp_path / "raw")
+        types = ("daily_sleep", "daily_activity", "daily_readiness")
+        first, last = TODAY - dt.timedelta(days=60), TODAY - dt.timedelta(days=1)
+        TestRunCostFlatInHistory._land_history(root, types, first, last)
+        with _job_group(spark, "backfill-listing"):
+            raw = scan_raw(spark, root, types, first, TODAY, RECORD_SCHEMA)
+        tasks = _tasks_per_job(spark, "backfill-listing")
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert tasks, "a 180-directory scan lists in a Spark job"
+        assert max(tasks) <= cap, f"listing jobs ran {tasks} tasks, cap {cap}"
+        assert raw.count() == 60 * len(types)
+
+
+class TestPy4jRoundTrips:
+    """A daily run builds its projections (fold, flatten, schema align,
+    raw-zone tagging) as SQL text with every name quoted, so its py4j
+    traffic follows the number of projections, not of types x columns.
+    Three types: about 4,100 round trips per daily run with ``Column``
+    chains, about 460 as SQL text (both counts include py4j's
+    object-release commands)."""
+
+    MAX_CALLS = 1000
+
+    def test_daily_run_round_trip_budget(self, spark, tmp_path, monkeypatch):
+        import gc
+
+        from py4j.clientserver import ClientServerConnection
+
+        cfg = _cfg(tmp_path)
+        run_pipeline(spark, cfg, TODAY)
+        gc.collect()  # release earlier tests' JVM objects outside the count
+        calls = []
+        real_send = ClientServerConnection.send_command
+
+        def counting_send(self, command):
+            calls.append(1)
+            return real_send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+        out = run_pipeline(spark, cfg, TODAY + dt.timedelta(days=1))
+        monkeypatch.undo()
+        assert out["new_rows"] == 1
+        assert 0 < len(calls) <= self.MAX_CALLS, f"{len(calls)} py4j round trips"
+
+    def test_wide_fold_quotes_names_and_values(self, spark):
+        """The fold's SQL text survives a column named with a dot, a
+        space, a backtick and braces, and a type name with a quote: same
+        schema and rows as the ``Column``-built fold."""
+        flat = spark.createDataFrame(
+            [("d1", "it's", 1, "x"), ("d1", "b", 2, "y"), ("d2", "b", 3, None)],
+            "day string, data_type string, `v.{0} w` int, `x``y` string",
+        )
+        types = ("it's", "b")
+        values = ["v.{0} w", "x`y"]
+        want = flat.groupBy("day").agg(
+            *[
+                F.max(F.when(F.col("data_type") == t, flat[f"`{c.replace('`', '``')}`"]))
+                .alias(f"{t}__{c}")
+                for t in types
+                for c in values
+            ]
+        )
+        got = etl._wide_by_day(flat, types)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
 
 
 class TestProbes:
@@ -314,6 +375,35 @@ class TestProbes:
         assert warehouse_distinct_days(spark, cfg).count() == 10
         assert warehouse_has_day(spark, cfg, TODAY - dt.timedelta(days=1))
         assert not warehouse_has_day(spark, cfg, TODAY)
+
+
+@contextmanager
+def _job_group(spark, group: str):
+    """Run the block's Spark jobs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _tasks_per_job(spark, group: str) -> list[int]:
+    """Tasks run by each job of ``group``."""
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    out = []
+    for job_id in tracker.getJobIdsForGroup(group):
+        tasks = 0
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            st = tracker.getStageInfo(stage_id)
+            if st is not None:
+                tasks += st.numCompletedTasks + st.numFailedTasks
+        out.append(tasks)
+    return out
 
 
 def _days(first: dt.date, last: dt.date) -> list[dt.date]:
